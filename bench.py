@@ -54,6 +54,51 @@ _PINNED_SUMMARY = (
 _SUMMARY_BUDGET = 1900
 
 
+#: core count of the headline bench record (BENCH_rNN.json); records
+#: and archives at any other count carry a ``_c<cpus>`` suffix
+#: (BENCH_r13_c8.json, BENCH_full_r13_c8.json)
+PRIMARY_CPUS = 32
+
+
+def _core_suffix(cpus: int) -> str:
+    return "" if cpus == PRIMARY_CPUS else f"_c{cpus}"
+
+
+def _rounds(repo: Path, prefix: str, suffix: str) -> list[int]:
+    """Rounds N of the ``{prefix}_r{N}{suffix}.json`` files; ``suffix``
+    is a regex."""
+    pat = re.compile(rf"{prefix}_r(\d+){suffix}\.json$")
+    return sorted(
+        int(m.group(1))
+        for p in repo.glob(f"{prefix}_r[0-9][0-9]*.json")
+        if (m := pat.match(p.name))
+    )
+
+
+def archive_path(repo: Path, cpus: int) -> Path:
+    """Per-query archive of a run at ``cpus`` cores. Each round records
+    BENCH_r{N}{suffix}.json after each of its bench runs, one per
+    core count, so the current round is the newest recorded one
+    unless this core count already has its record for it."""
+    suffix = _core_suffix(cpus)
+    latest = max(_rounds(repo, "BENCH", r"(?:_c\d+)?"), default=0)
+    if not latest or (repo / f"BENCH_r{latest:02d}{suffix}.json").exists():
+        latest += 1
+    return repo / f"BENCH_full_r{latest:02d}{suffix}.json"
+
+
+def reference_archive(repo: Path, cpus: int) -> tuple[int, Path]:
+    """(round, path) of the newest sf0.1 per-query archive recorded at
+    ``cpus`` cores — the scale gates' reference — or of the headline
+    core count's when none was recorded at ``cpus``."""
+    suffix = _core_suffix(cpus)
+    rounds = _rounds(repo, "BENCH_full", suffix)
+    if not rounds:
+        suffix = ""
+        rounds = _rounds(repo, "BENCH_full", suffix)
+    return rounds[-1], repo / f"BENCH_full_r{rounds[-1]:02d}{suffix}.json"
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
@@ -118,14 +163,8 @@ def main() -> None:
     full_path.write_text(json.dumps(full, indent=1))
     # per-round archive: BENCH_full.json is overwritten every run, which
     # loses the previous round's per-query detail (r02's timings survive
-    # only as a top-15). The driver writes BENCH_r{N}.json after this
-    # round's bench, so the current round is 1 + the highest recorded one.
-    rounds = [
-        int(m.group(1))
-        for p in repo.glob("BENCH_r[0-9][0-9].json")
-        if (m := re.match(r"BENCH_r(\d+)\.json$", p.name))
-    ]
-    archive = repo / f"BENCH_full_r{(max(rounds, default=0) + 1):02d}.json"
+    # only as a top-15)
+    archive = archive_path(repo, spark.sparkContext.defaultParallelism)
     archive.write_text(json.dumps(full, indent=1))
     print(summary_line(timings, total, sf, str(full_path), errors, rep_errors))
     spark.stop()

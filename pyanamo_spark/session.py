@@ -17,6 +17,10 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+#: the directory holding the ``pyanamo_spark`` package
+PACKAGE_ROOT = Path(__file__).resolve().parent.parent
+DAEMON_MODULE = "pyanamo_spark.executor.daemon"
+
 
 def _activate_protobuf_shim() -> None:
     """Make ``google.protobuf`` importable when no real wheel exists.
@@ -30,7 +34,7 @@ def _activate_protobuf_shim() -> None:
     """
     import importlib.util
 
-    vendor = str(Path(__file__).resolve().parent.parent / "vendor")
+    vendor = str(PACKAGE_ROOT / "vendor")
     try:
         spec = importlib.util.find_spec("google.protobuf")
     except ModuleNotFoundError:  # no `google` namespace at all
@@ -46,16 +50,29 @@ def _activate_protobuf_shim() -> None:
     # collection-order bug that broke the v2 drain mid-suite in r05).
     if vendor not in sys.path:
         sys.path.append(vendor)
+    _export_pythonpath(vendor)
+
+
+def _export_pythonpath(path: str) -> None:
+    """Append ``path`` to the PYTHONPATH the JVM hands every python
+    worker it spawns, once."""
     existing = os.environ.get("PYTHONPATH", "")
-    if vendor not in existing.split(os.pathsep):
+    real = os.path.realpath(path)
+    if not any(
+        os.path.isabs(e) and os.path.realpath(e) == real
+        for e in existing.split(os.pathsep)
+    ):
         os.environ["PYTHONPATH"] = (
-            f"{existing}{os.pathsep}{vendor}" if existing else vendor
+            f"{existing}{os.pathsep}{path}" if existing else path
         )
 
 
 def get_spark(app_name: str = "pyanamo_spark", cpus: int | str | None = None) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
     _activate_protobuf_shim()
+    # the daemon module below, and so every python worker, imports
+    # pyanamo_spark whatever this process's cwd or PYTHONPATH
+    _export_pythonpath(str(PACKAGE_ROOT))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -80,6 +97,9 @@ def get_spark(app_name: str = "pyanamo_spark", cpus: int | str | None = None) ->
         # filters — the GSI-seek semantics at the source boundary
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # workers fork from this daemon, which stops every task from
+        # re-reading pyspark.zip's directory (executor/daemon.py)
+        .config("spark.python.daemon.module", DAEMON_MODULE)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     spark = builder.getOrCreate()

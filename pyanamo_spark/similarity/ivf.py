@@ -243,7 +243,10 @@ def write_index(
         )
         centroids.write.parquet(f"{vdir}/centroids")
 
-    _commit_version(index_dir, writer)
+    try:
+        _commit_version(index_dir, writer)
+    finally:
+        centroids.unpersist()  # _build_from's model cache
 
 
 def vacuum_index(index_dir: str, keep: int = 2) -> int:
@@ -307,7 +310,10 @@ def rebuild_index(
         )
         centroids.write.parquet(f"{vdir}/centroids")
 
-    return _commit_version(index_dir, writer)
+    try:
+        return _commit_version(index_dir, writer)
+    finally:
+        centroids.unpersist()  # _build_from's model cache
 
 
 def append_to_index(

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import subprocess
 import sys
 import time
@@ -28,6 +27,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from bench import reference_archive  # noqa: E402
 from pyanamo_spark.registry import QUERIES, load_all  # noqa: E402
 from pyanamo_spark.session import get_spark  # noqa: E402
 
@@ -70,14 +70,9 @@ def main() -> int:
     spark = get_spark("pyanamo-spark-bench-sf10")
     QUERIES["q_state_counts"](spark, str(sf10)).collect()  # warm JVM
 
-    rounds = sorted(
-        int(m.group(1))
-        for p in REPO.glob("BENCH_full_r[0-9][0-9].json")
-        if (m := re.match(r"BENCH_full_r(\d+)\.json$", p.name))
-    )
-    ref = json.loads(
-        (REPO / f"BENCH_full_r{rounds[-1]:02d}.json").read_text()
-    )["queries"]
+    # reference sf0.1 seconds: the newest archive at this core count
+    rnd, ref_path = reference_archive(REPO, spark.sparkContext.defaultParallelism)
+    ref = json.loads(ref_path.read_text())["queries"]
 
     timings: dict[str, float] = {}
     failures: list[str] = []
@@ -124,7 +119,6 @@ def main() -> int:
         )
     spark.stop()
 
-    rnd = rounds[-1]
     out = {
         "metric": "worst_scalers_sf10_wall_clock",
         "unit": "sec",

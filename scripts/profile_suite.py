@@ -74,6 +74,7 @@ def main() -> None:
 
         cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
         sess._activate_protobuf_shim()
+        sess._export_pythonpath(str(sess.PACKAGE_ROOT))
         b = (
             SparkSession.builder.master(f"local[{cpus}]")
             .appName(app_name)
@@ -86,6 +87,7 @@ def main() -> None:
             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
             .config("spark.sql.python.filterPushdown.enabled", "true")
             .config("spark.ui.enabled", "false")
+            .config("spark.python.daemon.module", sess.DAEMON_MODULE)
             .config("spark.eventLog.enabled", "true")
             .config("spark.eventLog.dir", evdir)
             .config("spark.eventLog.compress", "false")

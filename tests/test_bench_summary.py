@@ -81,3 +81,42 @@ def test_pinned_set_matches_every_driver_parsed_record():
         f"driver-parsed names missing from _PINNED_SUMMARY: "
         f"{sorted(seen - set(bench._PINNED_SUMMARY))}"
     )
+
+
+def _records(tmp_path: Path, *names: str) -> Path:
+    for name in names:
+        (tmp_path / name).write_text("{}")
+    return tmp_path
+
+
+def test_archive_name_is_keyed_on_core_count(tmp_path):
+    """Round 13 as recorded after its 32-core run: the 8-core
+    run still belongs to round 13 (it was filed as BENCH_full_r14.json
+    when every record counted as a round)."""
+    repo = _records(tmp_path, "BENCH_r12.json", "BENCH_r12_c8.json", "BENCH_r13.json")
+    assert bench.archive_path(repo, 8).name == "BENCH_full_r13_c8.json"
+    assert bench.archive_path(repo, 4).name == "BENCH_full_r13_c4.json"
+    assert bench.archive_path(repo, 32).name == "BENCH_full_r14.json"
+    # once both round-13 records exist, every core count is in round 14
+    _records(repo, "BENCH_r13_c8.json")
+    assert bench.archive_path(repo, 8).name == "BENCH_full_r14_c8.json"
+    assert bench.archive_path(repo, 32).name == "BENCH_full_r14.json"
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert bench.archive_path(empty, 32).name == "BENCH_full_r01.json"
+
+
+def test_scale_gate_reference_is_keyed_on_core_count(tmp_path):
+    repo = _records(
+        tmp_path,
+        "BENCH_full_r12.json", "BENCH_full_r13.json",
+        "BENCH_full_r12_c8.json", "BENCH_full_r13_c8.json",
+    )
+    assert bench.reference_archive(repo, 32) == (13, repo / "BENCH_full_r13.json")
+    assert bench.reference_archive(repo, 8) == (13, repo / "BENCH_full_r13_c8.json")
+    # no archive at this core count: the headline one
+    assert bench.reference_archive(repo, 16) == (13, repo / "BENCH_full_r13.json")
+    # a newer archive at another core count never becomes the reference
+    _records(repo, "BENCH_full_r14_c8.json")
+    assert bench.reference_archive(repo, 32) == (13, repo / "BENCH_full_r13.json")

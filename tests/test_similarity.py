@@ -453,3 +453,24 @@ def test_vacuum_index_prunes_old_rebuild_versions(spark, sf_dir, tmp_path):
     assert {r.query_id for r in rows} == {0, 1, 2}
     # flat legacy stores have nothing to prune
     assert vacuum_index(str(tmp_path / "nothing")) == 0
+
+
+def test_index_writes_release_the_centroid_cache(spark, sf_dir, tmp_path):
+    """write_index and rebuild_index persist the refined centroids for
+    the build; a long-lived session must not keep that cache once the
+    version is committed."""
+    from pyanamo_spark import semantics
+    from pyanamo_spark.similarity.ivf import rebuild_index, write_index
+
+    semantics.ensure_views(spark, sf_dir)
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> int:
+        return jsc.getPersistentRDDs().size()
+
+    index_dir = str(tmp_path / "ivf_cache")
+    before = persisted()
+    write_index(spark, index_dir, iters=2)
+    assert persisted() == before
+    assert rebuild_index(spark, index_dir, imbalance_threshold=0.0) == 2
+    assert persisted() == before
